@@ -17,26 +17,23 @@ event_id keeps one event's (possibly re-emitted) hops in one partition
 — ordered per event, parallel across events; the engine reproduces the
 same framing so a reference client can talk to either engine.
 
-Spark mapping (SURVEY.md §3.3(a)): Structured Streaming cannot express
-a cycle inside one query, so the feedback edge stays a *topic* and the
-job becomes TWO independent streaming queries sharing ``internal`` —
-query A: source ⇒ route ⇒ invoke ⇒ egress-split, writing CLIENT rows to
-``client_reply`` and INTERNAL rows back to ``internal``; Kafka is the
-cycle's buffer exactly as in the reference.
+The live loop that composes these projections is
+:func:`streaming.feedback.run_event_loop` (two streaming queries sharing
+``internal``, over a ``streaming.transport`` wire).
 
-Everything that needs a live broker is isolated behind ``.load()`` /
-``.start()`` on builders returned unstarted (the ``spark-sql-kafka``
-package resolves them on a real cluster; it is absent in this sandbox).
-The framing projections — encode/decode, key derivation, egress split —
-are plain DataFrame transforms over the public Kafka record schema and
-are unit-tested broker-free on static frames.
+:func:`kafka_reader` is the one piece that needs a live broker: it is
+wired, not run here (no spark-sql-kafka); ``streaming.transport.
+KafkaTransport`` is its only caller.  The framing projections —
+encode/decode, key derivation, egress split — are plain DataFrame
+transforms over the public Kafka record schema and are unit-tested
+broker-free on static frames.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import DataStreamReader, DataStreamWriter
+from pyspark.sql.streaming import DataStreamReader
 from pyspark.sql.types import (
     BinaryType,
     IntegerType,
@@ -47,9 +44,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..schemas import CLIENT, INTERNAL
-from .proto import envelope_struct
-from .proto_native import from_proto_auto, to_proto_auto
+from ..schemas import CLIENT, EVENT_ENVELOPE, INTERNAL
+from .proto import envelope_struct, from_proto, to_proto
 
 TOPIC_INTERNAL = "internal"
 TOPIC_CLIENT_REQUEST = "client_request"
@@ -73,7 +69,7 @@ KAFKA_RECORD = StructType(
 
 
 # ---------------------------------------------------------------------------
-# builders (need a broker + the spark-sql-kafka package to .load()/.start())
+# builder (needs a broker + the spark-sql-kafka package to .load())
 # ---------------------------------------------------------------------------
 
 
@@ -98,23 +94,6 @@ def kafka_reader(
     )
 
 
-def kafka_writer(
-    frames: DataFrame,
-    checkpoint_dir: str,
-    bootstrap: str = DEFAULT_BOOTSTRAP,
-) -> DataStreamWriter:
-    """Configured (unstarted) writer for pre-framed (key, value, topic)
-    rows — R12/R13.  Exactly-once to the checkpoint; the broker hop
-    itself is at-least-once (same level the reference runs:
-    ``Semantic.AT_LEAST_ONCE``, StateFlowFlinkJob.java:131/138) —
-    downstream dedup keys on event_id."""
-    return (
-        frames.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-
-
 # ---------------------------------------------------------------------------
 # framing projections (broker-free, unit-tested)
 # ---------------------------------------------------------------------------
@@ -126,12 +105,9 @@ def decode_frames(raw: DataFrame) -> DataFrame:
     Value-only deserialization like the reference
     (``setValueOnlyDeserializer``, StateFlowFlinkJob.java:53): the key
     is transport framing, not payload — event identity rides inside the
-    proto.  Decode dispatches through the native-protobuf seam
-    (sources/proto_native.py): JVM ``from_protobuf`` under
-    ``SPARK_GRAFT_NATIVE_PROTO=1``, Arrow-batched pandas codec
-    otherwise."""
+    proto.  Decoding is the Arrow-batched codec of :mod:`.proto`."""
     return raw.select(
-        from_proto_auto(F.col("value")).alias("e"), "topic", "partition", "offset"
+        from_proto(F.col("value")).alias("e"), "topic", "partition", "offset"
     ).select("e.*", "topic", "partition", "offset")
 
 
@@ -142,7 +118,7 @@ def encode_frames(events: DataFrame, topic: str) -> DataFrame:
     producer framing of ``KafkaSerializeProto.java:24-30``."""
     return events.select(
         F.encode(F.col("event_id"), "utf-8").alias("key"),
-        to_proto_auto(envelope_struct()).alias("value"),
+        to_proto(envelope_struct()).alias("value"),
         F.lit(topic).alias("topic"),
     )
 
@@ -156,49 +132,10 @@ def egress_split(routed: DataFrame) -> tuple[DataFrame, DataFrame]:
     Expects ``direction`` from ``streaming.routing.route_egress``; both
     filters are views over ONE routed pass (Catalyst pushes each filter
     into the shared plan)."""
-    env_cols = [f.name for f in _envelope_fields()]
+    env_cols = [f.name for f in EVENT_ENVELOPE.fields]
     client = routed.filter(F.col("direction") == CLIENT).select(*env_cols)
     internal = routed.filter(F.col("direction") == INTERNAL).select(*env_cols)
     return (
         encode_frames(client, TOPIC_CLIENT_REPLY),
         encode_frames(internal, TOPIC_INTERNAL),
     )
-
-
-def _envelope_fields():
-    from ..schemas import EVENT_ENVELOPE
-
-    return EVENT_ENVELOPE.fields
-
-
-# ---------------------------------------------------------------------------
-# the full loop, wired (start on a real cluster)
-# ---------------------------------------------------------------------------
-
-
-def start_feedback_loop(
-    spark: SparkSession,
-    process,
-    checkpoint_root: str,
-    bootstrap: str = DEFAULT_BOOTSTRAP,
-):
-    """Wire and start the production event loop — two sinks over one
-    routed stream, sharing the ``internal`` topic with the source.
-
-    ``process`` is the engine pipeline ``(envelope DataFrame) ->
-    egress-routed DataFrame`` (must add ``direction``); typically
-    ``route_ingress`` ⇒ invoke/stateful apply ⇒ ``route_egress``.
-
-    Returns the two running StreamingQuery handles (client, internal).
-    Requires a live broker — integration entry point, not unit-testable
-    here; every projection it composes is tested statically."""
-    raw = kafka_reader(spark, bootstrap).load()
-    routed = process(decode_frames(raw))
-    client_frames, internal_frames = egress_split(routed)
-    q_client = kafka_writer(
-        client_frames, f"{checkpoint_root}/client", bootstrap
-    ).start()
-    q_internal = kafka_writer(
-        internal_frames, f"{checkpoint_root}/internal", bootstrap
-    ).start()
-    return q_client, q_internal

@@ -1,13 +1,8 @@
 """Topic transport seam — ONE event-loop code path, two physical wires.
 
 The reference's transport is Kafka and nothing else
-(``StateFlowFlinkJob.java:47-54`` source, ``:127-147`` producers).  The
-sandbox has no broker and no ``spark-sql-kafka`` package, so round 3
-ran the live cycle on plain parquet directories — but through loop code
-that bypassed the production framing (``sources/kafka.py``), leaving the
-builders dead until a cluster exercised them.
-
-This module closes that gap with a *transport* seam.  A transport moves
+(``StateFlowFlinkJob.java:47-54`` source, ``:127-147`` producers).  A
+*transport* moves
 **Kafka-shaped records** — ``(key binary, value binary, topic, partition,
 offset, timestamp)``, the public ``format("kafka")`` schema
 (``sources.kafka.KAFKA_RECORD``) — between topics:
@@ -15,8 +10,8 @@ offset, timestamp)``, the public ``format("kafka")`` schema
   * :class:`KafkaTransport` — the production wire: readers come from
     :func:`sources.kafka.kafka_reader` (R1) and appends are batch
     ``format("kafka")`` writes (the standard foreachBatch producer
-    pattern, R12/R13).  Needs a live broker + the spark-sql-kafka
-    package to ``.load()``/``.save()``.
+    pattern, R12/R13).  Wired, not run here (no spark-sql-kafka): it
+    needs a live broker and that package to ``.load()``/``.save()``.
   * :class:`DirectoryTransport` — the sandbox wire: each topic is a
     directory of parquet part-files holding the SAME record schema.
     ``partition`` is stamped by key-hash (Kafka's contract: one key →
@@ -32,9 +27,9 @@ production path minus only the socket.
 
 from __future__ import annotations
 
-import threading
-
 import os
+import shutil
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -80,6 +75,13 @@ class DirectoryTransport:
         contract); ``offset`` is (producer-epoch << 40) | within-write-id
         — unique and append-ordered per topic rather than per-partition-
         contiguous, which is all the loop reads from it.
+
+        Each append is written to its own staging directory outside every
+        topic and its part-files are then renamed into the topic.  Two
+        queries append to ``internal`` concurrently; writing straight
+        into the topic would share one ``_temporary`` directory, and one
+        job's cleanup would delete the other's uncommitted files.  The
+        rename also means a reader never sees a half-written file.
         """
         with self._epoch_lock:
             self._epoch += 1
@@ -98,7 +100,13 @@ class DirectoryTransport:
             F.current_timestamp().alias("timestamp"),
             F.lit(0).alias("timestampType"),
         )
-        stamped.write.mode("append").parquet(self.topic_dir(topic))
+        staging = os.path.join(self.base, "_staging", f"{topic}-{epoch}")
+        stamped.write.mode("overwrite").parquet(staging)
+        dest = self.topic_dir(topic)
+        for name in os.listdir(staging):
+            if name.endswith(".parquet"):  # not _SUCCESS or .crc files
+                os.rename(os.path.join(staging, name), os.path.join(dest, name))
+        shutil.rmtree(staging)
 
     def read_batch(self, spark: SparkSession, topic: str) -> DataFrame:
         """Bounded snapshot (drain checks / assertions).  Returns an
@@ -111,11 +119,11 @@ class DirectoryTransport:
 
 
 class KafkaTransport:
-    """The production wire — composes the R1/R12/R13 builders from
-    :mod:`sources.kafka` so the loop code path is identical to the
-    sandbox transport above.  Requires a live broker and the
-    ``spark-sql-kafka`` package (absent here; construction and plan
-    wiring are testable, ``.load()``/``.save()`` are not)."""
+    """The production wire — the R1 reader from :mod:`sources.kafka` plus
+    batch ``format("kafka")`` producers, so the loop code path is
+    identical to the sandbox transport above.  Wired, not run here (no
+    spark-sql-kafka): it needs a live broker and that package, so only
+    construction and source resolution are tested."""
 
     def __init__(self, bootstrap: str = DEFAULT_BOOTSTRAP) -> None:
         self.bootstrap = bootstrap

@@ -3,10 +3,17 @@ run broker-free on directory topics).  See streaming/feedback.py."""
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import functions as F
 
 from stateflow_flink_spark.io import load
-from stateflow_flink_spark.streaming.feedback import run_feedback_loop
+from stateflow_flink_spark.sources.kafka import TOPIC_INTERNAL
+from stateflow_flink_spark.streaming.feedback import (
+    make_flow_requests,
+    run_event_loop,
+)
+from stateflow_flink_spark.streaming.transport import DirectoryTransport
 
 from .conftest import SF_SMOKE
 
@@ -16,50 +23,34 @@ def test_feedback_loop_drains_every_flow_exactly_once(spark):
     cycle one micro-batch per hop and land EXACTLY ONE reply with the
     closed-form hop count — the same contract the batch analog
     (q_flow_iterate) proves, now across two concurrent streaming
-    queries sharing the internal topic."""
-    seed = (
+    queries sharing the internal topic.  The hop count is read off the
+    internal topic: one record per hop of each flow (the ingress send
+    plus one feedback send per unfinished hop)."""
+    flows = (
         load(spark, SF_SMOKE, "events")
         .select("event_id", (F.col("event_id") % 3 + 1).alias("steps_left"))
         .limit(120)
     )
-    n = seed.count()
-    replies = run_feedback_loop(spark, seed, timeout_s=90.0)
+    n = flows.count()
+    transport = DirectoryTransport(tempfile.mkdtemp(prefix="sfs_feedback_"))
+    replies = run_event_loop(
+        spark, transport, make_flow_requests(spark, flows), timeout_s=90.0
+    )
     rows = replies.collect()
     assert len(rows) == n  # exactly one reply per flow, none duplicated
+    assert {r.event_id for r in rows} == {
+        str(e) for (e,) in flows.select("event_id").collect()
+    }
     for r in rows:
         assert r.current_node_type == "RETURN"
         assert r.reply == "SuccessfulInvocation"
-        assert r.n_hops == r.event_id % 3 + 1, r
-        assert r.steps_left == 0
-
-
-def test_feedback_loop_populates_invoke_latency_histogram(spark):
-    """Round-7 judge item 8: with ``latency`` wired, every hop of the
-    live cycle runs as a per-event invoked call and lands one histogram
-    sample — after the drain the driver-side snapshot is populated with
-    EXACTLY one sample per hop (sum of steps over the seeds), mean/max
-    are sane, and the replies are byte-identical to the untimed loop's
-    contract.  This is the reference's metric-scrape point: the
-    Dropwizard histogram read after the job has processed its events."""
-    from stateflow_flink_spark.streaming.metrics import InvokeLatency
-
-    seed = (
-        load(spark, SF_SMOKE, "events")
-        .select("event_id", (F.col("event_id") % 3 + 1).alias("steps_left"))
-        .limit(60)
+        assert int(r.current_fun_key) == 0  # every step burned
+    hops = (
+        transport.read_batch(spark, TOPIC_INTERNAL)
+        .groupBy(F.col("key").cast("string").alias("event_id"))
+        .count()
+        .collect()
     )
-    n = seed.count()
-    total_hops = seed.agg(F.sum("steps_left")).collect()[0][0]
-    lat = InvokeLatency(spark, name="feedback_hop_latency")
-    replies = run_feedback_loop(spark, seed, timeout_s=90.0, latency=lat)
-    rows = replies.collect()
-    assert len(rows) == n
-    for r in rows:
-        assert r.n_hops == r.event_id % 3 + 1, r
-
-    snap = lat.snapshot()
-    assert snap["name"] == "feedback_hop_latency"
-    assert snap["count"] == total_hops, snap
-    assert sum(snap["buckets"].values()) == total_hops
-    assert snap["max_ms"] >= 0.0 and snap["mean_ms"] > 0.0
-    assert snap["p50_le_ms"] is not None and snap["p99_le_ms"] is not None
+    assert len(hops) == n
+    for h in hops:
+        assert h["count"] == int(h.event_id) % 3 + 1, h

@@ -12,13 +12,21 @@ that substitution is what test_kafka_transport_format_wiring pins.
 from __future__ import annotations
 
 import tempfile
+import threading
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
 from stateflow_flink_spark.io import load
-from stateflow_flink_spark.sources.kafka import KAFKA_RECORD, TOPIC_CLIENT_REQUEST
+from stateflow_flink_spark.sources.kafka import (
+    KAFKA_RECORD,
+    TOPIC_CLIENT_REQUEST,
+    TOPIC_INTERNAL,
+)
 from stateflow_flink_spark.streaming.feedback import (
+    advance_envelope,
+    invoked_advance,
     make_flow_requests,
     run_event_loop,
 )
@@ -30,16 +38,21 @@ from stateflow_flink_spark.streaming.transport import (
 from .conftest import SF_SMOKE
 
 
+def _hop_flows(spark, n: int):
+    """``n`` fixture flows, each with ``event_id % 3 + 1`` hops."""
+    return (
+        load(spark, SF_SMOKE, "events")
+        .select("event_id", (F.col("event_id") % 3 + 1).alias("steps_left"))
+        .limit(n)
+    )
+
+
 def test_wire_loop_drains_every_flow_exactly_once(spark):
     """Same contract as test_feedback_loop_drains_every_flow_exactly_once
     but over the WIRE path: each flow (event_id % 3 + 1 hops) crosses
     one proto encode/decode per hop and lands exactly one
     SuccessfulInvocation reply."""
-    flows = (
-        load(spark, SF_SMOKE, "events")
-        .select("event_id", (F.col("event_id") % 3 + 1).alias("steps_left"))
-        .limit(60)
-    )
+    flows = _hop_flows(spark, 60)
     n = flows.count()
     seed = make_flow_requests(spark, flows)
     transport = DirectoryTransport(tempfile.mkdtemp(prefix="sfs_wire_"))
@@ -54,6 +67,87 @@ def test_wire_loop_drains_every_flow_exactly_once(spark):
         assert r.request is None  # oneof flipped request -> reply
         assert r.current_node_type == "RETURN"
         assert int(r.current_fun_key) == 0  # counter fully burned
+
+
+def test_invoked_advance_matches_advance_envelope(spark):
+    """The per-event hop and the column hop are one hop in two forms:
+    on the same envelopes (mid-flow, last step, exhausted, null cursor,
+    plus the decode metadata columns) they must give identical rows."""
+    flows = spark.createDataFrame(
+        [(1, 3), (2, 2), (3, 1), (4, 0), (5, None)],
+        "event_id long, steps_left long",
+    )
+    env = make_flow_requests(spark, flows).withColumns(
+        {
+            "topic": F.lit(TOPIC_INTERNAL),
+            "partition": F.col("event_id").cast("int"),
+            "offset": F.col("event_id").cast("long"),
+        }
+    )
+    by_column = advance_envelope(env)
+    by_event = invoked_advance(None)(env)
+    assert by_event.dtypes == by_column.dtypes
+    assert sorted(map(tuple, by_event.collect())) == sorted(
+        map(tuple, by_column.collect())
+    )
+
+
+def test_wire_loop_populates_invoke_latency_histogram(spark):
+    """With ``advance=invoked_advance(lat)`` every hop of the live cycle
+    runs as a per-event invoked call and lands one histogram sample:
+    after the drain the driver-side snapshot holds EXACTLY one sample
+    per hop (the sum of steps over the seeds), and the replies keep the
+    loop's contract.  This is the reference's metric-scrape point: the
+    Dropwizard histogram read after the job has processed its events."""
+    from stateflow_flink_spark.streaming.metrics import InvokeLatency
+
+    flows = _hop_flows(spark, 60)
+    n = flows.count()
+    total_hops = flows.agg(F.sum("steps_left")).collect()[0][0]
+    lat = InvokeLatency(spark, name="feedback_hop_latency")
+    transport = DirectoryTransport(tempfile.mkdtemp(prefix="sfs_wire_lat_"))
+    replies = run_event_loop(
+        spark,
+        transport,
+        make_flow_requests(spark, flows),
+        advance=invoked_advance(lat),
+        timeout_s=90.0,
+    )
+    rows = replies.collect()
+    assert len(rows) == n
+    for r in rows:
+        assert r.reply == "SuccessfulInvocation"
+        assert int(r.current_fun_key) == 0
+
+    snap = lat.snapshot()
+    assert snap["name"] == "feedback_hop_latency"
+    assert snap["count"] == total_hops, snap
+    assert sum(snap["buckets"].values()) == total_hops
+    assert snap["max_ms"] >= 0.0 and snap["mean_ms"] > 0.0
+    assert snap["p50_le_ms"] is not None and snap["p99_le_ms"] is not None
+
+
+def test_wire_loop_fails_fast_when_a_query_dies(spark):
+    """A worker batch that raises kills query B; the drain must surface
+    that error at once instead of waiting out ``timeout_s``."""
+
+    def broken_advance(df):
+        raise RuntimeError("advance exploded")
+
+    flows = spark.range(3).select(
+        F.col("id").alias("event_id"), F.lit(2).alias("steps_left")
+    )
+    transport = DirectoryTransport(tempfile.mkdtemp(prefix="sfs_wire_dead_"))
+    t0 = time.time()
+    with pytest.raises(Exception, match="advance exploded"):
+        run_event_loop(
+            spark,
+            transport,
+            make_flow_requests(spark, flows),
+            advance=broken_advance,
+            timeout_s=300.0,
+        )
+    assert time.time() - t0 < 60.0
 
 
 def test_wire_loop_ping_answered_from_ingress(spark):
@@ -117,6 +211,40 @@ def test_directory_transport_record_shape_and_key_partitioning(spark):
     )
     # offsets unique within the topic
     assert got.select("offset", "partition").distinct().count() == 100
+
+
+def test_directory_transport_concurrent_appends_keep_every_row(spark):
+    """Producers appending to one topic at the same time (the loop's
+    ingress and worker queries both append to ``internal``) must not
+    lose each other's rows: every append succeeds and every row of every
+    append is present.  Four producers make the overlap near-certain."""
+    transport = DirectoryTransport(tempfile.mkdtemp(prefix="sfs_race_"))
+    n_producers, n_appends, n_rows = 4, 15, 100
+    errors: list[Exception] = []
+
+    def produce(p: int) -> None:
+        try:
+            for a in range(n_appends):
+                first = (p * n_appends + a) * n_rows
+                frames = spark.range(first, first + n_rows).select(
+                    F.encode(F.col("id").cast("string"), "utf-8").alias("key"),
+                    F.col("id").cast("string").cast("binary").alias("value"),
+                )
+                transport.append(frames, TOPIC_INTERNAL)
+        except Exception as exc:  # surfaced by the assertion below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=produce, args=(p,)) for p in range(n_producers)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=240.0)
+    assert not any(t.is_alive() for t in threads), "appends did not finish in time"
+    assert not errors, errors
+    got = transport.read_batch(spark, TOPIC_INTERNAL)
+    total = n_producers * n_appends * n_rows
+    assert got.count() == total
+    assert got.select("key").distinct().count() == total
 
 
 def test_kafka_transport_format_wiring(spark):

@@ -31,26 +31,33 @@ from pyspark.sql import SparkSession
 _LOCAL_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
 
 
+# The engine defaults as (key, value, runtime): configure sets every
+# entry, apply_runtime_conf only the runtime ones.
+_DEFAULTS: tuple[tuple[str, str, bool], ...] = (
+    ("spark.sql.session.timeZone", "UTC", True),
+    ("spark.sql.adaptive.enabled", "true", True),
+    ("spark.sql.adaptive.coalescePartitions.enabled", "true", True),
+    ("spark.sql.adaptive.skewJoin.enabled", "true", True),
+    ("spark.sql.shuffle.partitions", _LOCAL_SHUFFLE_PARTITIONS, False),
+    ("spark.sql.execution.arrow.pyspark.enabled", "true", True),
+    # 128m parquet split size: keeps scan tasks balanced at any SF.
+    ("spark.sql.files.maxPartitionBytes", "134217728", False),
+    # Broadcast threshold: dims (region/nation/supplier/part at test
+    # SF) broadcast automatically; AQE can also convert at runtime.
+    ("spark.sql.autoBroadcastJoinThreshold", "64m", False),
+    ("spark.sql.parquet.filterPushdown", "true", True),
+)
+
+
 def configure(builder: SparkSession.Builder) -> SparkSession.Builder:
     """Apply engine defaults to any SparkSession builder.
 
     Kept separate from :func:`get_spark` so the driver-owned session in
     ``__spark_entry__`` and test sessions share one config surface.
     """
-    return (
-        builder.config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", _LOCAL_SHUFFLE_PARTITIONS)
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # 128m parquet split size: keeps scan tasks balanced at any SF.
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
-        # Broadcast threshold: dims (region/nation/supplier/part at test
-        # SF) broadcast automatically; AQE can also convert at runtime.
-        .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        .config("spark.sql.parquet.filterPushdown", "true")
-    )
+    for key, value, _ in _DEFAULTS:
+        builder = builder.config(key, value)
+    return builder
 
 
 def get_spark(app_name: str = "stateflow-flink-spark", master: str | None = None) -> SparkSession:
@@ -61,20 +68,17 @@ def get_spark(app_name: str = "stateflow-flink-spark", master: str | None = None
 
 
 def apply_runtime_conf(spark: SparkSession) -> SparkSession:
-    """Apply the runtime-settable subset of defaults to an existing session.
+    """Apply the defaults marked runtime to an existing session.
 
     Used when the driver hands us a session we didn't build
-    (``__spark_entry__.entry``): static configs (shuffle service, etc.)
-    can't change post-start, but timezone / AQE / arrow can.
+    (``__spark_entry__.entry``).  The three sizing keys it skips
+    (``shuffle.partitions``, ``files.maxPartitionBytes``,
+    ``autoBroadcastJoinThreshold``) are not static — all three can be
+    set at runtime — they are left at the session owner's values.
     """
-    for key, value in (
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-        ("spark.sql.adaptive.skewJoin.enabled", "true"),
-        ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-        ("spark.sql.parquet.filterPushdown", "true"),
-    ):
+    for key, value, runtime in _DEFAULTS:
+        if not runtime:
+            continue
         try:
             spark.conf.set(key, value)
         except Exception:  # pragma: no cover - static conf on some builds

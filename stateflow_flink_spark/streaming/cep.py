@@ -24,17 +24,14 @@ checkpointing on top.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.cep import _CEP_ORACLE
 from ..plans.registry import query
-from ..session import python_state_partitions, stream_partitions
-from .state import stream_events_dir
+from ..session import python_state_partitions
+from .state import keyed_fold, run_bounded, stream_events_dir
 
 _CEP_OUTPUT = (
     "user_id long, start_event_id long, end_event_id long, "
@@ -47,13 +44,8 @@ def apply_cep_stream(events: DataFrame) -> DataFrame:
     emits one row per completed `view click* purchase` match.  Columns
     required on ``events``: user_id, ts, event_id, event_type."""
 
-    def fold_group(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            start_id, start_us, n_clicks = state.get
-        else:
-            start_id, start_us, n_clicks = None, None, None
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
+    def step(key, pdf: pd.DataFrame, state):
+        start_id, start_us, n_clicks = state if state is not None else (None,) * 3
         out: dict[str, list] = {c: [] for c in
                                 ("start_event_id", "end_event_id",
                                  "n_clicks", "span_us")}
@@ -75,25 +67,21 @@ def apply_cep_stream(events: DataFrame) -> DataFrame:
                 start_id = start_us = n_clicks = None
             else:  # signup / error / unmatched purchase: reset to idle
                 start_id = start_us = n_clicks = None
-        if start_id is None:
-            if state.exists:
-                state.remove()
-        else:
-            state.update((start_id, start_us, n_clicks))
+        matches = None
         if out["end_event_id"]:
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]] * len(out["end_event_id"]),
-                    **out,
-                }
+            matches = pd.DataFrame(
+                {"user_id": [key[0]] * len(out["end_event_id"]), **out}
             )
+        # an idle key holds no state: the pending match IS the state
+        pending = None if start_id is None else (start_id, start_us, n_clicks)
+        return matches, pending
 
-    return events.groupBy("user_id").applyInPandasWithState(
-        fold_group,
-        outputStructType=_CEP_OUTPUT,
-        stateStructType="start_id long, start_us long, n_clicks long",
-        outputMode="Append",
-        timeoutConf="NoTimeout",
+    return keyed_fold(
+        events,
+        "user_id",
+        step,
+        _CEP_OUTPUT,
+        "start_id long, start_us long, n_clicks long",
     )
 
 
@@ -105,13 +93,6 @@ def q_stream_cep(spark: SparkSession, sf_dir: str) -> DataFrame:
     events, _ = stream_events_dir(spark, sf_dir)
     ops = events.select("user_id", "ts", "event_id", "event_type")
     result = apply_cep_stream(ops)
-    with stream_partitions(spark, python_state_partitions(spark)):
-        qy = (
-            result.writeStream.format("memory")
-            .queryName("sfs_stream_cep")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        qy.awaitTermination()
-    return spark.table("sfs_stream_cep")
+    return run_bounded(
+        spark, result, "sfs_stream_cep", partitions=python_state_partitions(spark)
+    )

@@ -48,16 +48,12 @@ from __future__ import annotations
 
 import os
 import pickle
-import shutil
-import tempfile
-from collections.abc import Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load
 from ..operators.dedup import (
     JACCARD_TAU,
     hashed_shingles,
@@ -65,7 +61,8 @@ from ..operators.dedup import (
 )
 from ..plans.registry import query
 from ..schemas import DOCUMENTS
-from ..session import stream_partitions
+from ..session import python_state_partitions
+from .state import keyed_fold, run_bounded, stage_file
 
 _FLAG_OUTPUT = "doc_id long, dup_of long"
 _ORACLE_SHINGLES = """
@@ -104,11 +101,7 @@ _MINHASH_STREAM_ORACLE = f"""
 
 def stream_documents_dir(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, str]:
     """Stage documents.parquet into a dir and open it as a stream."""
-    stage = tempfile.mkdtemp(prefix="sfs_stream_docs_")
-    shutil.copy(
-        os.path.join(sf_dir, "documents.parquet"),
-        os.path.join(stage, "part-0.parquet"),
-    )
+    stage = stage_file(os.path.join(sf_dir, "documents.parquet"), "sfs_stream_docs_")
     return spark.readStream.schema(DOCUMENTS).parquet(stage), stage
 
 
@@ -217,21 +210,16 @@ def apply_minhash_dedup_stream(docs: DataFrame) -> DataFrame:
         ).alias("skey"),
     )
 
-    def verify_group(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
+    def verify_step(key, pdf: pd.DataFrame, state):
         # state: {(band, bucket): [(doc_id, shingle-set), ...]} — merged
         # group = state-store partition, true bucket = verify scope
-        members: dict = pickle.loads(state.get[0]) if state.exists else {}
-        pdf = pd.concat(list(pdfs), ignore_index=True)
+        members: dict = pickle.loads(state[0]) if state is not None else {}
         out = fold_bucket_members(members, pdf)
-        state.update((pickle.dumps(members),))
-        yield out
+        return out, (pickle.dumps(members),)
 
-    return keyed.groupBy("skey").applyInPandasWithState(
-        verify_group,
-        outputStructType=_FLAG_OUTPUT,
-        stateStructType="blob binary",
-        outputMode="Append",
-        timeoutConf="NoTimeout",
+    # fold_bucket_members sorts by doc_id itself (the seniority order)
+    return keyed_fold(
+        keyed, "skey", verify_step, _FLAG_OUTPUT, "blob binary", order=None
     )
 
 
@@ -242,25 +230,22 @@ def run_minhash_dedup_stream(
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """One bounded pass of the incremental dedup; returns the PER-BAND
-    flag table (memory sink).  ``checkpoint_dir`` resumes bucket state
-    across runs — the unbounded-ingest path the resume test exercises."""
+    flag table (memory sink).  ``checkpoint_dir`` names the run's
+    checkpoint (see state.run_bounded); the resume test carries bucket
+    state across runs through apply_minhash_dedup_stream and a
+    foreachBatch sink."""
     flags = apply_minhash_dedup_stream(docs)
     # Unlike the scalar fold queries (state-store COUNT is pure fixed
     # overhead there — session.stream_partitions defaults lower), this op does
     # real Python work per bucket group, so it wants every core: at
     # sf0.1 with 32 cores, 8 partitions run 17.6 s, 32 run 7.1 s.
-    with stream_partitions(spark, spark.sparkContext.defaultParallelism):
-        writer = (
-            flags.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-        )
-        if checkpoint_dir is not None:
-            writer = writer.option("checkpointLocation", checkpoint_dir)
-        qy = writer.start()
-        qy.awaitTermination()
-    return spark.table(query_name)
+    return run_bounded(
+        spark,
+        flags,
+        query_name,
+        partitions=python_state_partitions(spark),
+        checkpoint_dir=checkpoint_dir,
+    )
 
 
 def dedup_verdicts(flags: DataFrame) -> DataFrame:

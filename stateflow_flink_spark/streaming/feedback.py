@@ -39,6 +39,7 @@ a timeout.
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import time
 from typing import Callable
@@ -253,5 +254,6 @@ def run_event_loop(
     finally:
         qa.stop()
         qb.stop()
+        shutil.rmtree(base, ignore_errors=True)  # both queries are done with it
     return decode_frames(transport.read_batch(spark, TOPIC_CLIENT_REPLY))
 

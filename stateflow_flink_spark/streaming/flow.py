@@ -24,6 +24,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..artifacts import register_tmpdir
 from ..io import load
 from ..plans.registry import query
 
@@ -47,7 +48,8 @@ def iterate_flow(flows: DataFrame, advance, max_steps: int = MAX_FLOW_STEPS) -> 
     not 64, and nothing stays pinned after the call.
     """
     spark = flows.sparkSession
-    stage = tempfile.mkdtemp(prefix="sfs_flow_done_")
+    # the returned frame reads the stage, so it is removed at exit
+    stage = register_tmpdir(tempfile.mkdtemp(prefix="sfs_flow_done_"))
     frontier = flows
     prev: DataFrame | None = None
     for _ in range(max_steps):

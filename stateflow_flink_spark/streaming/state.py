@@ -28,19 +28,22 @@ The function contract mirrors ``EventRequestReply`` (event.proto:77-81):
 from __future__ import annotations
 
 import json
+import math
 import os
 import shutil
 import tempfile
+import time
 from collections.abc import Callable, Iterator
+from decimal import ROUND_HALF_UP, Decimal
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..artifacts import register_tmpdir
 from ..session import python_state_partitions, stream_partitions
 
-from ..io import load
 from ..numerics import sql_wsum
 from ..plans.registry import query
 from ..io import open_events_stream
@@ -138,13 +141,104 @@ _FOLD_OUTPUT = (
 )
 
 
+def stage_file(src: str, prefix: str) -> str:
+    """Copy one fixture file into a fresh dir, the shape Spark's file
+    stream source reads (at scale the source is already a dir of
+    arriving part files).  The stream keeps reading the dir after the
+    caller returns, so it is registered for removal at interpreter exit
+    instead of being removed here."""
+    stage = register_tmpdir(tempfile.mkdtemp(prefix=prefix))
+    shutil.copy(src, os.path.join(stage, "part-0.parquet"))
+    return stage
+
+
 def stream_events_dir(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, str]:
     """Stage events.parquet into a dir and open it as a stream
     (ts normalized to TimestampType by io.open_events_stream)."""
-    stage = tempfile.mkdtemp(prefix="sfs_stream_events_")
     src = os.path.join(sf_dir, "events.parquet")
-    shutil.copy(src, os.path.join(stage, "part-0.parquet"))
+    stage = stage_file(src, "sfs_stream_events_")
     return open_events_stream(spark, stage, src), stage
+
+
+def run_bounded(
+    spark: SparkSession,
+    result: DataFrame,
+    query_name: str,
+    partitions: int | str | None = None,
+    output_mode: str = "append",
+    checkpoint_dir: str | None = None,
+) -> DataFrame:
+    """Run one bounded streaming query to its end and return its rows.
+
+    ``availableNow`` drains what the source holds, then stops (no
+    wall-clock waits); the memory sink keeps the rows as table
+    ``query_name``.  ``partitions`` pins the state-partition count for
+    the run (``session.stream_partitions``; None keeps the JVM-family
+    default).  ``checkpoint_dir`` names the run's checkpoint, so its
+    state can be inspected afterwards; the memory sink refuses to
+    restart from a used one (a resumed run needs another sink, as the
+    restart tests' foreachBatch runs do)."""
+    with stream_partitions(spark, partitions):
+        writer = (
+            result.writeStream.format("memory")
+            .queryName(query_name)
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
+        )
+        if checkpoint_dir is not None:
+            writer = writer.option("checkpointLocation", checkpoint_dir)
+        writer.start().awaitTermination()
+    return spark.table(query_name)
+
+
+def latest_per_key(rows: DataFrame, key: str, *newest_first) -> DataFrame:
+    """Each key's newest row of an append sink that holds one summary
+    per (key, micro-batch); ``newest_first`` orders a key's rows newest
+    first."""
+    w = Window.partitionBy(key).orderBy(*newest_first)
+    return rows.withColumn("_r", F.row_number().over(w)).filter(F.col("_r") == 1).drop("_r")
+
+
+def keyed_fold(
+    events: DataFrame,
+    key: str,
+    step: Callable,
+    output_schema: str,
+    state_schema: str,
+    order: tuple[str, ...] | None = ("ts", "event_id"),
+) -> DataFrame:
+    """The one keyed-state shell (InvokeStatefulLambda.java:75-114).
+
+    Per key and micro-batch: concatenate the group's frames, stable-sort
+    them by ``order`` (None keeps arrival order), read the state (None
+    on first touch), call ``step(key, pdf, state) -> (out_pdf, state')``,
+    write ``state'`` back (None removes it) and emit ``out_pdf`` (None
+    emits nothing).  Sorting within the batch is what makes a fold
+    replay-stable.
+
+    Append mode with NoTimeout: a registered GroupState timeout keeps an
+    availableNow query alive past its data (measured: the query never
+    terminates), so no operator here evicts idle keys."""
+
+    def fold_group(k, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
+        pdf = pd.concat(list(pdfs), ignore_index=True)
+        if order:
+            pdf = pdf.sort_values(list(order), kind="mergesort")
+        out, new_state = step(k, pdf, state.get if state.exists else None)
+        if new_state is not None:
+            state.update(new_state)
+        elif state.exists:
+            state.remove()
+        if out is not None:
+            yield out
+
+    return events.groupBy(key).applyInPandasWithState(
+        fold_group,
+        outputStructType=output_schema,
+        stateStructType=state_schema,
+        outputMode="Append",
+        timeoutConf="NoTimeout",
+    )
 
 
 def apply_stateful(
@@ -163,13 +257,9 @@ def apply_stateful(
     reads as EMPTY on its next event — first-touch semantics
     (``InvokeStatefulLambda.java:75-77``).  The blob is wrapped with its
     last-update timestamp and expiry is decided on read (exact).  Storage
-    for a never-touched-again key is not reclaimed: GroupState's
-    ProcessingTimeTimeout would evict it, but a registered timeout keeps
-    an availableNow query alive past its data (measured: the query never
-    terminates), so idle-key eviction is traded for bounded-run
-    semantics.
+    for a never-touched-again key is not reclaimed (see keyed_fold: no
+    timeout, so no idle-key eviction).
     """
-    grouped = events.groupBy("user_id")
     fn = get_stateful(operator_name)
     vfn = get_stateful_vectorized(operator_name)
     if latency is not None:
@@ -181,20 +271,16 @@ def apply_stateful(
         if vfn is not None:
             vfn = latency.timed_stateful(vfn)
 
-    def fold_group(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        import time
-
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
+    def step(key, pdf: pd.DataFrame, state):
         now_ms = int(time.time() * 1000)
-        if ttl_ms is None:
-            blob = state.get[0] if state.exists else b""
-        elif state.exists:
-            stored_ms, blob = state.get
+        if state is None:
+            blob = b""
+        elif ttl_ms is None:
+            blob = state[0]
+        else:
+            stored_ms, blob = state
             if now_ms - stored_ms > ttl_ms:
                 blob = b""  # expired -> EMPTY first-touch re-init
-        else:
-            blob = b""
         if vfn is not None:
             out_pdf, blob = vfn(pdf, blob)
         else:
@@ -203,17 +289,14 @@ def apply_stateful(
                 out, blob = fn(event, blob)
                 outs.append(out)
             out_pdf = pd.DataFrame(outs)
-        state.update((blob,) if ttl_ms is None else (now_ms, blob))
-        yield out_pdf
+        return out_pdf, ((blob,) if ttl_ms is None else (now_ms, blob))
 
-    return grouped.applyInPandasWithState(
-        fold_group,
-        outputStructType=_FOLD_OUTPUT,
-        stateStructType=(
-            "blob binary" if ttl_ms is None else "ts_ms long, blob binary"
-        ),
-        outputMode="Append",
-        timeoutConf="NoTimeout",
+    return keyed_fold(
+        events,
+        "user_id",
+        step,
+        _FOLD_OUTPUT,
+        "blob binary" if ttl_ms is None else "ts_ms long, blob binary",
     )
 
 
@@ -228,23 +311,17 @@ def run_stateful_stream(
 ) -> DataFrame:
     """Run the keyed stateful operator over a (bounded) event stream and
     materialize the result via the memory sink.  ``checkpoint_dir``
-    lets callers resume the SAME state across multiple availableNow
-    runs (the restart path TTL tests exercise); ``ttl_ms`` bounds
+    names the run's checkpoint (see run_bounded); ``ttl_ms`` bounds
     per-key state lifetime (see apply_stateful); ``latency`` records
     the per-invoke histogram (see metrics.InvokeLatency)."""
     result = apply_stateful(events, operator_name, ttl_ms=ttl_ms, latency=latency)
-    with stream_partitions(spark, python_state_partitions(spark)):
-        writer = (
-            result.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-        )
-        if checkpoint_dir is not None:
-            writer = writer.option("checkpointLocation", checkpoint_dir)
-        qy = writer.start()
-        qy.awaitTermination()
-    return spark.table(query_name)
+    return run_bounded(
+        spark,
+        result,
+        query_name,
+        partitions=python_state_partitions(spark),
+        checkpoint_dir=checkpoint_dir,
+    )
 
 
 @query(
@@ -304,11 +381,9 @@ def apply_scd2_stream(events: DataFrame) -> DataFrame:
     this operator watermark-sorted input (buffer by `withWatermark` +
     event-time sort in the upstream batch) so the clamp never fires."""
 
-    def fold_group(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
-        if state.exists:
-            cur_type, cur_from_us, cur_ver, cur_clamped = state.get
+    def step(key, pdf: pd.DataFrame, state):
+        if state is not None:
+            cur_type, cur_from_us, cur_ver, cur_clamped = state
         else:
             cur_type, cur_from_us, cur_ver, cur_clamped = None, 0, 0, False
         out = []
@@ -339,8 +414,7 @@ def apply_scd2_stream(events: DataFrame) -> DataFrame:
                 )
                 cur_type, cur_from_us, cur_ver = row.event_type, ts_us, cur_ver + 1
                 cur_clamped = clamp_fired
-        state.update((cur_type, cur_from_us, cur_ver, bool(cur_clamped)))
-        yield pd.DataFrame(
+        closed = pd.DataFrame(
             out,
             columns=[
                 "user_id",
@@ -351,15 +425,14 @@ def apply_scd2_stream(events: DataFrame) -> DataFrame:
                 "is_clamped",
             ],
         )
+        return closed, (cur_type, cur_from_us, cur_ver, bool(cur_clamped))
 
-    return events.groupBy("user_id").applyInPandasWithState(
-        fold_group,
-        outputStructType=_SCD2_STREAM_OUTPUT,
-        stateStructType=(
-            "cur_type string, from_us long, version int, clamped boolean"
-        ),
-        outputMode="Append",
-        timeoutConf="NoTimeout",
+    return keyed_fold(
+        events,
+        "user_id",
+        step,
+        _SCD2_STREAM_OUTPUT,
+        "cur_type string, from_us long, version int, clamped boolean",
     )
 
 
@@ -400,16 +473,16 @@ def q_scd2_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     result = apply_scd2_stream(
         events.select("user_id", "event_type", "ts", "event_id")
     )
-    with stream_partitions(spark, python_state_partitions(spark)):
-        qy = (
-            result.writeStream.format("memory")
-            .queryName("sfs_scd2_stream")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        qy.awaitTermination()
-    return spark.table("sfs_scd2_stream")
+    return run_bounded(
+        spark, result, "sfs_scd2_stream", partitions=python_state_partitions(spark)
+    )
+
+
+def half_up(x: float) -> int:
+    """Spark's double->DECIMAL(38,0) cast, exactly: BigDecimal rounds
+    HALF_UP on the double's shortest decimal repr, and Decimal(repr(x))
+    is that same repr — the recipe every integer-exact fold here uses."""
+    return int(Decimal(repr(x)).to_integral_value(rounding=ROUND_HALF_UP))
 
 
 # ---------------------------------------------------------------------------
@@ -441,26 +514,19 @@ def apply_ewma_stream(events: DataFrame) -> DataFrame:
     (ts, event_id) among events seen so far", so the final summary per
     user equals the batch answer under any batching/replay."""
     import pickle
-    from decimal import ROUND_HALF_UP, Decimal
 
     from ..operators.timeseries import EWMA_WINDOW
 
-    def fold_group(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        top: list = pickle.loads(state.get[0]) if state.exists else []
-        pdf = pd.concat(list(pdfs), ignore_index=True)
+    def step(key, pdf: pd.DataFrame, state):
+        top: list = pickle.loads(state[0]) if state is not None else []
         for row in pdf.itertuples():
-            xs = int(
-                Decimal(repr(float(row.value) * 1_000_000)).to_integral_value(
-                    rounding=ROUND_HALF_UP
-                )
-            )
+            xs = half_up(float(row.value) * 1_000_000)
             top.append((row.ts.value // 1000, int(row.event_id), xs))
         top.sort(key=lambda t: (-t[0], -t[1]))
         del top[EWMA_WINDOW:]
         num = sum(xs * (1 << (EWMA_WINDOW - rn)) for rn, (_, _, xs) in enumerate(top, 1))
         den = sum(1 << (EWMA_WINDOW - rn) for rn in range(1, len(top) + 1))
-        state.update((pickle.dumps(top),))
-        yield pd.DataFrame(
+        summary = pd.DataFrame(
             {
                 "user_id": [key[0]],
                 "last_ts": [pd.Timestamp(top[0][0], unit="us")],
@@ -469,13 +535,10 @@ def apply_ewma_stream(events: DataFrame) -> DataFrame:
                 "ewma_value": [float(num) / float(den) / 1_000_000],
             }
         )
+        return summary, (pickle.dumps(top),)
 
-    return events.groupBy("user_id").applyInPandasWithState(
-        fold_group,
-        outputStructType=_EWMA_STREAM_OUTPUT,
-        stateStructType="blob binary",
-        outputMode="Append",
-        timeoutConf="NoTimeout",
+    return keyed_fold(
+        events, "user_id", step, _EWMA_STREAM_OUTPUT, "blob binary", order=None
     )
 
 
@@ -508,26 +571,12 @@ def q_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     result = apply_ewma_stream(
         events.select("user_id", "ts", "event_id", "value")
     )
-    with stream_partitions(spark, python_state_partitions(spark)):
-        qy = (
-            result.writeStream.format("memory")
-            .queryName("sfs_stream_ewma")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        qy.awaitTermination()
-    from pyspark.sql import Window as W
-
-    latest = W.partitionBy("user_id").orderBy(
-        F.desc("last_ts"), F.desc("last_event_id")
+    summaries = run_bounded(
+        spark, result, "sfs_stream_ewma", partitions=python_state_partitions(spark)
     )
-    return (
-        spark.table("sfs_stream_ewma")
-        .withColumn("_r", F.row_number().over(latest))
-        .filter(F.col("_r") == 1)
-        .select("user_id", "n_used", "ewma_value")
-    )
+    return latest_per_key(
+        summaries, "user_id", F.desc("last_ts"), F.desc("last_event_id")
+    ).select("user_id", "n_used", "ewma_value")
 
 
 # ---------------------------------------------------------------------------
@@ -595,13 +644,12 @@ def apply_hll_stream(events: DataFrame) -> DataFrame:
 
     import numpy as np
 
-    def fold_group(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
+    def step(key, pdf: pd.DataFrame, state):
         reg = (
-            np.frombuffer(state.get[0], dtype=np.uint8).copy()
-            if state.exists
+            np.frombuffer(state[0], dtype=np.uint8).copy()
+            if state is not None
             else np.zeros(_HLL_M, dtype=np.uint8)
         )
-        pdf = pd.concat(list(pdfs), ignore_index=True)
         for uid in pdf["user_id"].unique():
             hx = hashlib.md5(str(int(uid)).encode()).hexdigest()
             j = int(hx[:8], 16) % _HLL_M
@@ -613,21 +661,13 @@ def apply_hll_stream(events: DataFrame) -> DataFrame:
             )
             if rho > reg[j]:
                 reg[j] = rho
-        state.update((reg.tobytes(),))
         nz = int((reg > 0).sum())
         v = _HLL_M - nz
         if v > 0:
-            import math
-            from decimal import ROUND_HALF_UP, Decimal
-
-            est = int(
-                Decimal(repr(_HLL_M * math.log(_HLL_M / v))).to_integral_value(
-                    rounding=ROUND_HALF_UP
-                )
-            )
+            est = half_up(_HLL_M * math.log(_HLL_M / v))
         else:
             est = None
-        yield pd.DataFrame(
+        summary = pd.DataFrame(
             {
                 "event_type": [key[0]],
                 "reg_nonzero": [nz],
@@ -635,15 +675,15 @@ def apply_hll_stream(events: DataFrame) -> DataFrame:
                 "est_users": [est],
             }
         )
+        return summary, (reg.tobytes(),)
 
-    return events.groupBy("event_type").applyInPandasWithState(
-        fold_group,
-        outputStructType=(
-            "event_type string, reg_nonzero long, reg_sum long, est_users long"
-        ),
-        stateStructType="blob binary",
-        outputMode="Append",
-        timeoutConf="NoTimeout",
+    return keyed_fold(
+        events,
+        "event_type",
+        step,
+        "event_type string, reg_nonzero long, reg_sum long, est_users long",
+        "blob binary",
+        order=None,
     )
 
 
@@ -656,23 +696,9 @@ def q_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     bookkeeping needed to pick it."""
     events, _ = stream_events_dir(spark, sf_dir)
     result = apply_hll_stream(events.select("event_type", "user_id"))
-    with stream_partitions(spark):
-        qy = (
-            result.writeStream.format("memory")
-            .queryName("sfs_stream_hll")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        qy.awaitTermination()
-    latest = Window.partitionBy("event_type").orderBy(
-        F.desc("reg_sum"), F.desc("reg_nonzero")
-    )
-    return (
-        spark.table("sfs_stream_hll")
-        .withColumn("_r", F.row_number().over(latest))
-        .filter(F.col("_r") == 1)
-        .drop("_r")
+    summaries = run_bounded(spark, result, "sfs_stream_hll")
+    return latest_per_key(
+        summaries, "event_type", F.desc("reg_sum"), F.desc("reg_nonzero")
     )
 
 
@@ -728,20 +754,12 @@ def apply_anomaly_stream(events: DataFrame) -> DataFrame:
     Python ints are unbounded, the oracle computes in HUGEINT — so no
     sqrt, no division, no float ever enters the comparison."""
     import pickle
-    from decimal import ROUND_HALF_UP, Decimal
 
-    def fold_group(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        n, s, ssq = pickle.loads(state.get[0]) if state.exists else (0, 0, 0)
-        pdf = pd.concat(list(pdfs), ignore_index=True).sort_values(
-            ["ts", "event_id"], ignore_index=True
-        )
+    def step(key, pdf: pd.DataFrame, state):
+        n, s, ssq = pickle.loads(state[0]) if state is not None else (0, 0, 0)
         out_e, out_n, out_f = [], [], []
         for row in pdf.itertuples():
-            x = int(
-                Decimal(repr(float(row.value) * 1_000_000)).to_integral_value(
-                    rounding=ROUND_HALF_UP
-                )
-            )
+            x = half_up(float(row.value) * 1_000_000)
             flag = n >= _ANOM_MIN_N and (n * x - s) ** 2 > _ANOM_Z2 * (
                 n * ssq - s * s
             )
@@ -749,8 +767,7 @@ def apply_anomaly_stream(events: DataFrame) -> DataFrame:
             out_n.append(n)
             out_f.append(bool(flag))
             n, s, ssq = n + 1, s + x, ssq + x * x
-        state.update((pickle.dumps((n, s, ssq)),))
-        yield pd.DataFrame(
+        flags = pd.DataFrame(
             {
                 "user_id": [key[0]] * len(out_e),
                 "event_id": out_e,
@@ -758,13 +775,14 @@ def apply_anomaly_stream(events: DataFrame) -> DataFrame:
                 "is_anomaly": out_f,
             }
         )
+        return flags, (pickle.dumps((n, s, ssq)),)
 
-    return events.groupBy("user_id").applyInPandasWithState(
-        fold_group,
-        outputStructType="user_id long, event_id long, n_prior long, is_anomaly boolean",
-        stateStructType="blob binary",
-        outputMode="Append",
-        timeoutConf="NoTimeout",
+    return keyed_fold(
+        events,
+        "user_id",
+        step,
+        "user_id long, event_id long, n_prior long, is_anomaly boolean",
+        "blob binary",
     )
 
 
@@ -778,16 +796,9 @@ def q_stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     result = apply_anomaly_stream(
         events.select("user_id", "ts", "event_id", "value")
     )
-    with stream_partitions(spark, python_state_partitions(spark)):
-        qy = (
-            result.writeStream.format("memory")
-            .queryName("sfs_stream_anomaly")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        qy.awaitTermination()
-    return spark.table("sfs_stream_anomaly")
+    return run_bounded(
+        spark, result, "sfs_stream_anomaly", partitions=python_state_partitions(spark)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -854,28 +865,17 @@ def apply_cdc_stream(events: DataFrame) -> DataFrame:
     Cents conversion matches Spark's double→DECIMAL(38,0) cast exactly
     (Decimal(repr(x)) HALF_UP — the apply_ewma_stream recipe), so the
     fold is bit-identical to the batch oracle's arithmetic."""
-    from decimal import ROUND_HALF_UP, Decimal
 
-    def fold_group(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            bal, present, n_applied = state.get
-        else:
-            bal, present, n_applied = 0, False, 0
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
+    def step(key, pdf: pd.DataFrame, state):
+        bal, present, n_applied = state if state is not None else (0, False, 0)
         for row in pdf.itertuples():
             if row.event_type == "error":
                 bal, present = 0, False
             else:
-                cents = int(
-                    Decimal(repr(float(row.value) * 100)).to_integral_value(
-                        rounding=ROUND_HALF_UP
-                    )
-                )
+                cents = half_up(float(row.value) * 100)
                 bal, present = (bal if present else 0) + cents, True
             n_applied += 1
-        state.update((bal, bool(present), n_applied))
-        yield pd.DataFrame(
+        current = pd.DataFrame(
             {
                 "user_id": [key[0]],
                 "balance": [bal / 100.0 if present else None],
@@ -883,13 +883,14 @@ def apply_cdc_stream(events: DataFrame) -> DataFrame:
                 "n_applied": [n_applied],
             }
         )
+        return current, (bal, bool(present), n_applied)
 
-    return events.groupBy("user_id").applyInPandasWithState(
-        fold_group,
-        outputStructType=_CDC_APPLY_OUTPUT,
-        stateStructType="bal long, present boolean, n_applied long",
-        outputMode="Append",
-        timeoutConf="NoTimeout",
+    return keyed_fold(
+        events,
+        "user_id",
+        step,
+        _CDC_APPLY_OUTPUT,
+        "bal long, present boolean, n_applied long",
     )
 
 
@@ -910,19 +911,9 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "ts", "event_id", "event_type", "value"
     )
     result = apply_cdc_stream(ops)
-    with stream_partitions(spark, python_state_partitions(spark)):
-        qy = (
-            result.writeStream.format("memory")
-            .queryName("sfs_stream_cdc_apply")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        qy.awaitTermination()
-    latest = Window.partitionBy("user_id").orderBy(F.desc("n_applied"))
-    return (
-        spark.table("sfs_stream_cdc_apply")
-        .withColumn("_r", F.row_number().over(latest))
-        .filter(F.col("_r") == 1)
-        .select("user_id", "balance", "is_present")
+    rows = run_bounded(
+        spark, result, "sfs_stream_cdc_apply", partitions=python_state_partitions(spark)
+    )
+    return latest_per_key(rows, "user_id", F.desc("n_applied")).select(
+        "user_id", "balance", "is_present"
     )

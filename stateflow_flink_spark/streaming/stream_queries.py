@@ -7,13 +7,18 @@ unbounded source) run in tests/test_streaming.py.
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..artifacts import register_tmpdir
 from ..io import load
 from ..plans.registry import query
 from ..session import stream_partitions
-from .state import stream_events_dir
+from .state import run_bounded, stream_events_dir
 
 
 @query(
@@ -94,16 +99,7 @@ def q_stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(F.col("w.start").alias("window_start"), "n_events")
     )
-    with stream_partitions(spark):
-        qy = (
-            counts.writeStream.format("memory")
-            .queryName("sfs_stream_watermark")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        qy.awaitTermination()
-    return spark.table("sfs_stream_watermark")
+    return run_bounded(spark, counts, "sfs_stream_watermark", output_mode="complete")
 
 
 @query(
@@ -143,19 +139,10 @@ def q_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n")
     )
-    with stream_partitions(spark):
-        qy = (
-            counts.writeStream.format("memory")
-            .queryName("sfs_stream_topk")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        qy.awaitTermination()
+    counts = run_bounded(spark, counts, "sfs_stream_topk", output_mode="complete")
     rk = Window.partitionBy("window_start").orderBy(F.desc("n"), F.asc("event_type"))
     return (
-        spark.table("sfs_stream_topk")
-        .withColumn("rk", F.row_number().over(rk).cast("long"))
+        counts.withColumn("rk", F.row_number().over(rk).cast("long"))
         .filter(F.col("rk") <= 3)
     )
 
@@ -175,10 +162,8 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     static side per micro-batch, so the dim can update between batches
     and no join state accumulates.  The canonical pattern for joining a
     100 TB event stream to reference data."""
-    from ..io import load as load_static
-
     events, _ = stream_events_dir(spark, sf_dir)
-    customers = load_static(spark, sf_dir, "customer").select(
+    customers = load(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
     joined = (
@@ -186,16 +171,45 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_mktsegment")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    with stream_partitions(spark):
-        qy = (
-            joined.writeStream.format("memory")
-            .queryName("sfs_stream_static_join")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
+    return run_bounded(spark, joined, "sfs_stream_static_join", output_mode="complete")
+
+
+def _click_purchase_join(events: DataFrame, how: str) -> DataFrame:
+    """The interval join both stream-stream queries run: clicks and
+    purchases filtered off ONE events stream, each leg under a 1-hour
+    watermark, a purchase matching a same-user click within the next 30
+    minutes.  The time bound is what lets the state store evict a row
+    once the watermark passes its join window."""
+    c = (
+        events.filter(F.col("event_type") == "click")
+        .withWatermark("ts", "1 hour")
+        .select(
+            F.col("event_id").alias("click_id"),
+            F.col("user_id").alias("c_user"),
+            F.col("ts").alias("c_ts"),
         )
-        qy.awaitTermination()
-    return spark.table("sfs_stream_static_join")
+    )
+    p = (
+        events.filter(F.col("event_type") == "purchase")
+        .withWatermark("ts", "1 hour")
+        .select(
+            F.col("event_id").alias("purchase_id"),
+            F.col("user_id").alias("p_user"),
+            F.col("ts").alias("p_ts"),
+        )
+    )
+    return c.join(
+        p,
+        (F.col("c_user") == F.col("p_user"))
+        & (F.col("p_ts") >= F.col("c_ts"))
+        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTES")),
+        how,
+    ).select(
+        "click_id",
+        "purchase_id",
+        F.col("c_user").alias("user_id"),
+        (F.unix_micros(F.col("p_ts")) - F.unix_micros(F.col("c_ts"))).alias("gap_us"),
+    )
 
 
 @query(
@@ -227,35 +241,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     directory once, not once per leg.  Batch twin of the same plan:
     q_join_range."""
     events, _ = stream_events_dir(spark, sf_dir)
-    c = (
-        events.filter(F.col("event_type") == "click")
-        .withWatermark("ts", "1 hour")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-    )
-    p = (
-        events.filter(F.col("event_type") == "purchase")
-        .withWatermark("ts", "1 hour")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-    )
-    joined = c.join(
-        p,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTES")),
-    ).select(
-        "click_id",
-        "purchase_id",
-        F.col("c_user").alias("user_id"),
-        (F.unix_micros(F.col("p_ts")) - F.unix_micros(F.col("c_ts"))).alias("gap_us"),
-    )
+    joined = _click_purchase_join(events, "inner")
     # r14 (measured): availableNow runs a SECOND, no-data micro-batch
     # after the data batch purely to advance the watermark and evict
     # state — for an INNER join every result row was already emitted in
@@ -267,20 +253,11 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # there rides later data batches anyway.
     _NDMB = "spark.sql.streaming.noDataMicroBatches.enabled"
     saved = spark.conf.get(_NDMB)
-    with stream_partitions(spark):
-        try:
-            spark.conf.set(_NDMB, "false")
-            qy = (
-                joined.writeStream.format("memory")
-                .queryName("sfs_stream_stream_join")
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            qy.awaitTermination()
-        finally:
-            spark.conf.set(_NDMB, saved)
-    return spark.table("sfs_stream_stream_join")
+    try:
+        spark.conf.set(_NDMB, "false")
+        return run_bounded(spark, joined, "sfs_stream_stream_join")
+    finally:
+        spark.conf.set(_NDMB, saved)
 
 
 @query(
@@ -303,11 +280,9 @@ def q_stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_distinct per type must equal the batch truth (the oracle).  At
     100 TB the same layout doubles as ingestion-time partitioning —
     downstream readers prune by batch directory."""
-    import shutil
-    import tempfile
-
     stream, stage = stream_events_dir(spark, sf_dir)
-    out = tempfile.mkdtemp(prefix="sfs_fb_sink_")
+    out = register_tmpdir(tempfile.mkdtemp(prefix="sfs_fb_sink_"))
+    ckpt = register_tmpdir(tempfile.mkdtemp(prefix="sfs_fb_ckpt_"))
 
     def write_batch(df: DataFrame, batch_id: int) -> None:
         # idempotence = per-batch directory + overwrite: replaying batch
@@ -318,7 +293,7 @@ def q_stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         q = (
             stream.writeStream.foreachBatch(write_batch)
             .trigger(availableNow=True)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="sfs_fb_ckpt_"))
+            .option("checkpointLocation", ckpt)
             .start()
         )
         q.awaitTermination()
@@ -357,8 +332,6 @@ def q_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     (full-outer merge on the group key), so a replayed batch
     regenerates its version idempotently instead of double-counting —
     same recovery contract as the foreachBatch sink."""
-    import shutil
-
     stream, stage = stream_events_dir(spark, sf_dir)
     try:
         return run_incremental_rollup(spark, stream)
@@ -371,8 +344,6 @@ def rollup_versions_on_disk(root: str, below: int | None = None) -> list[int]:
     ascending), optionally restricted to versions < `below`.  Local
     filesystem listing — on an object-store root this seam is where a
     Hadoop-FS listing would go."""
-    import os
-
     try:
         names = os.listdir(root)
     except FileNotFoundError:
@@ -452,10 +423,9 @@ def run_incremental_rollup(
     fixture-scale query path.  Exposed separately so tests can feed a
     deliberately multi-batch source (maxFilesPerTrigger) through the
     merge path and replay individual batches."""
-    import tempfile
-
     if root is None:
-        root = tempfile.mkdtemp(prefix="sfs_rollup_")
+        root = register_tmpdir(tempfile.mkdtemp(prefix="sfs_rollup_"))
+    ckpt = register_tmpdir(tempfile.mkdtemp(prefix="sfs_rollup_ckpt_"))
 
     # track which versions THIS run produced: the final read must never
     # pick up a stale higher version left in a reused durable root by an
@@ -470,7 +440,7 @@ def run_incremental_rollup(
         q = (
             stream.writeStream.foreachBatch(_merge)
             .trigger(availableNow=True)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="sfs_rollup_ckpt_"))
+            .option("checkpointLocation", ckpt)
             .start()
         )
         q.awaitTermination()
@@ -552,43 +522,5 @@ def q_stream_stream_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     source scan, state is watermark-evicted O(events/hour) per side);
     the outer rows add no state — they ARE the evictions."""
     events, _ = stream_events_dir(spark, sf_dir)
-    c = (
-        events.filter(F.col("event_type") == "click")
-        .withWatermark("ts", "1 hour")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-    )
-    p = (
-        events.filter(F.col("event_type") == "purchase")
-        .withWatermark("ts", "1 hour")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-    )
-    joined = c.join(
-        p,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "left_outer",
-    ).select(
-        "click_id",
-        "purchase_id",
-        F.col("c_user").alias("user_id"),
-        (F.unix_micros(F.col("p_ts")) - F.unix_micros(F.col("c_ts"))).alias("gap_us"),
-    )
-    with stream_partitions(spark):
-        qy = (
-            joined.writeStream.format("memory")
-            .queryName("sfs_stream_stream_left")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        qy.awaitTermination()
-    return spark.table("sfs_stream_stream_left")
+    joined = _click_purchase_join(events, "left_outer")
+    return run_bounded(spark, joined, "sfs_stream_stream_left")

@@ -275,6 +275,30 @@ def test_minhash_dedup_stream_state_survives_restart(spark, tmp_path):
     assert pd.isna(second[11])
 
 
+def test_minhash_stream_honours_stream_partition_override(spark, tmp_path, monkeypatch):
+    """SPARK_GRAFT_STREAM_PARTITIONS sizes every Python-stateful family
+    together (session.python_state_partitions), the minhash stream
+    included: its checkpointed bucket state lands in exactly that many
+    state partitions."""
+    from stateflow_flink_spark.streaming.dedup_stream import (
+        run_minhash_dedup_stream,
+        stream_documents_dir,
+    )
+
+    from .conftest import SF_SMOKE
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTITIONS", "3")
+    ckpt = tmp_path / "ckpt"
+    docs, _ = stream_documents_dir(spark, SF_SMOKE)
+    flags = run_minhash_dedup_stream(
+        spark, docs, query_name="sfs_minhash_override", checkpoint_dir=str(ckpt)
+    )
+    assert flags.count() > 0
+    # one dir per state partition (besides the operator's _metadata)
+    parts = sorted(p.name for p in (ckpt / "state" / "0").iterdir() if p.name.isdigit())
+    assert parts == ["0", "1", "2"], parts
+
+
 def test_minhash_dedup_stream_member_cap():
     """BUCKET_MEMBER_CAP bounds per-bucket state (judge r10 item 4):
     members beyond the cap are verified (they still get a verdict

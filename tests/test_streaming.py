@@ -692,3 +692,71 @@ def test_cdc_apply_query_is_batching_invariant(spark, tmp_path):
         .reset_index(drop=True)
     )
     assert multi.equals(official)
+
+
+def test_streaming_family_temp_dirs_do_not_leak(spark, tmp_path, monkeypatch):
+    """Scratch dirs of the streaming family never outlive their use: the
+    event loop removes its checkpoint base once both queries stop, and a
+    staged source dir (which the returned stream keeps reading) is
+    registered for removal at interpreter exit."""
+    import stateflow_flink_spark.artifacts as A
+    from stateflow_flink_spark.streaming.dedup_stream import stream_documents_dir
+    from stateflow_flink_spark.streaming.feedback import (
+        make_flow_requests,
+        run_event_loop,
+    )
+    from stateflow_flink_spark.streaming.state import stream_events_dir
+    from stateflow_flink_spark.streaming.transport import DirectoryTransport
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    flows = (
+        load(spark, SF_SMOKE, "events")
+        .select("event_id", (F.col("event_id") % 3 + 1).alias("steps_left"))
+        .limit(5)
+    )
+    replies = run_event_loop(
+        spark,
+        DirectoryTransport(str(tmp_path / "wire")),
+        make_flow_requests(spark, flows),
+        timeout_s=90.0,
+    )
+    assert replies.count() == 5
+    assert not list(tmp_path.glob("sfs_wireloop_ck_*")), "loop checkpoint leaked"
+
+    for stage_source in (stream_events_dir, stream_documents_dir):
+        _, stage = stage_source(spark, SF_SMOKE)
+        assert os.path.dirname(stage) == str(tmp_path)
+        assert stage in A._TMPDIRS, f"{stage_source.__name__} stage unregistered"
+
+
+def test_per_event_stateful_path_matches_vectorized_fold(spark):
+    """apply_stateful's scalar branch — the reference's per-event
+    ``fn(event, state)`` contract, the one a remote invoker takes — must
+    give engine/Fold's (vectorized) rows exactly, and an InvokeLatency
+    on it counts one sample per event."""
+    from stateflow_flink_spark.streaming.metrics import InvokeLatency
+    from stateflow_flink_spark.streaming.state import (
+        fold_fn,
+        register_stateful,
+        run_stateful_stream,
+        stream_events_dir,
+    )
+
+    register_stateful("test/FoldPerEvent", fold_fn)  # no vectorized twin
+    events, _ = stream_events_dir(spark, SF_SMOKE)
+    vectorized = run_stateful_stream(
+        spark, events, query_name="sfs_fold_vectorized"
+    ).toPandas()
+    lat = InvokeLatency(spark, "per_event_fold")
+    events, _ = stream_events_dir(spark, SF_SMOKE)
+    per_event = run_stateful_stream(
+        spark,
+        events,
+        operator_name="test/FoldPerEvent",
+        query_name="sfs_fold_per_event",
+        latency=lat,
+    ).toPandas()
+    assert canonical_rows(per_event) == canonical_rows(vectorized)
+    n_events = load(spark, SF_SMOKE, "events").count()
+    assert len(per_event) == n_events
+    assert lat.snapshot()["count"] == n_events
